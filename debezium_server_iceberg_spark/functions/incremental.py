@@ -115,6 +115,54 @@ def reset_epoch(spark, table: LakeTable) -> None:
     table.append(empty, summary={"epoch_reset": "true"})
 
 
+def _admit_batch(
+    table: LakeTable,
+    append_frame: DataFrame,
+    result: DataFrame,
+    has_history: bool,
+    epoch_id: int | None,
+    on_result: Callable[[DataFrame], None] | None,
+    caches: list[DataFrame],
+) -> DataFrame:
+    """The one commit path of both indexes' ``add_batch``: stage
+    ``append_frame`` and checkpoint ``result`` (overlapped once history
+    has filled ``caches``; a cold batch checkpoints first, filling them),
+    run ``on_result``, then commit the append, epoch-stamped if given.
+
+    Crash matrix (results durable before the commit on every path): a
+    failure before the commit removes the staged files and adds no
+    snapshot, so a retry appends once; death after ``on_result`` leaves
+    no stamp, so a replay recomputes and re-delivers; death after the
+    commit leaves the stamp, so a replay skips both.  ``caches`` are
+    released on every path."""
+    summary = {"epoch_id": str(epoch_id)} if epoch_id is not None else None
+    meta = table.metadata()
+
+    def checkpoint() -> DataFrame:
+        return result.localCheckpoint(eager=True)
+
+    try:
+        cold = None if has_history else checkpoint()
+
+        def commit(add, checkpointed: DataFrame | None) -> DataFrame:
+            out = cold if checkpointed is None else checkpointed
+            if on_result is not None:
+                on_result(out)
+            table._commit_snapshot("append", add, set(), summary)
+            return out
+
+        return table._stage_then_commit(
+            [
+                lambda: table._stage_write(append_frame, meta),
+                checkpoint if has_history else None,
+            ],
+            commit,
+        )
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
 PBUCKET_COL = "pbucket"
 PBUCKETS_PROP = "index.pbuckets"
 
@@ -354,11 +402,10 @@ class MinHashIndex:
         prior attempt's durable results with emptiness).
 
         ``on_result`` is the exactly-once sink hook: it is invoked with
-        the materialized pairs BEFORE the epoch-stamped append commits,
-        so "epoch stamped" implies "results durable" — a crash anywhere
-        leaves a replay able to either recompute deterministically (stamp
-        missing) or skip both effects (stamp present).  On a replayed
-        epoch the hook is NOT invoked."""
+        the materialized pairs BEFORE the append commits, so "epoch
+        stamped" implies "results durable"; on a replayed epoch it is NOT
+        invoked.  Every call takes one path (crash matrix on
+        :func:`_admit_batch`); a failed call leaves the table unchanged."""
         spark = docs.sparkSession
         if self._epoch_already_applied(epoch_id):
             return None
@@ -395,8 +442,8 @@ class MinHashIndex:
             part_vals = None
         else:
             # cold first batch: n_new is never read (no broadcast decision
-            # to make) and the pairs checkpoint below fills the cache —
-            # the count was a whole job buying nothing
+            # to make) and the pairs checkpoint fills the cache — the
+            # count was a whole job buying nothing
             n_new = 0
             part_vals = None
         b = new.select(
@@ -438,43 +485,11 @@ class MinHashIndex:
                 )
             )
             combined = cross.unionByName(within)
-        if epoch_id is None and on_result is None and has_history:
-            # no epoch stamp and no sink hook -> the pairs checkpoint and
-            # the append staging are INDEPENDENT jobs over the same
-            # materialized cache (the pairs plan pinned the pre-append
-            # file list when `old` was built; lakehouse reads are
-            # snapshot-isolated) — overlap them so the per-job driver
-            # fixed cost doesn't serialize (guide §2.6).  The exactly-
-            # once feeds (epoch_id/on_result set) keep the strict order:
-            # results durable BEFORE the epoch stamp commits.  Cold first
-            # batches (no history) stay sequential: their cache is NOT
-            # yet materialized (the probe agg never ran), and two
-            # concurrent consumers would compute the band rows twice.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_pairs = pool.submit(
-                    lambda: self._verified(combined).localCheckpoint(eager=True)
-                )
-                fut_append = pool.submit(self.table.append, new)
-                pairs = fut_pairs.result()
-                fut_append.result()
-            new.unpersist()
-            return pairs
-        # verified pairs materialize BEFORE the append (and before the
-        # cache is released) — the checkpoint also makes the returned
-        # DataFrame independent of this batch's cached/staged state
-        pairs = self._verified(combined).localCheckpoint(eager=True)
-        if on_result is not None:
-            # sink effect first: once the epoch stamp commits, the results
-            # are already durable (see docstring's crash matrix)
-            on_result(pairs)
-        self.table.append(
-            new,  # carries exactly the table's columns (incl. pbucket)
-            summary={"epoch_id": str(epoch_id)} if epoch_id is not None else None,
+        # `new` carries exactly the table's columns (incl. pbucket)
+        return _admit_batch(
+            self.table, new, self._verified(combined), has_history,
+            epoch_id, on_result, [new],
         )
-        new.unpersist()
-        return pairs
 
     def remove_docs(self, spark, doc_ids) -> int:
         """CDC deletes propagate into the index: ALL band rows of the
@@ -621,9 +636,9 @@ class SubstringIndex:
 
         ``epoch_id`` (streaming feeds) makes the append idempotent: a
         replayed epoch appends nothing and returns ``None`` without
-        invoking ``on_result`` — same contract as
-        :meth:`MinHashIndex.add_batch` (the sink hook runs on the
-        materialized profile BEFORE the epoch-stamped append)."""
+        invoking ``on_result`` — same single path as
+        :meth:`MinHashIndex.add_batch` (:func:`_admit_batch`): a failed
+        call leaves no ``n_docs`` rows, so a retry never doubles counts."""
         from ..lakehouse.table import _BROADCAST_BYTES, _est_row_width
 
         from .text import word_gram_hashes
@@ -666,8 +681,8 @@ class SubstringIndex:
             part_vals = None
         else:
             # cold first batch: n_batch is never read (no probe side to
-            # size) and the profile checkpoint below fills both caches —
-            # the count was a whole job buying nothing
+            # size) and the profile checkpoint fills both caches — the
+            # count was a whole job buying nothing
             n_batch = 0
             part_vals = None
         if has_history:
@@ -717,39 +732,10 @@ class SubstringIndex:
             F.col("_nb").alias("n_docs"),
             *([PBUCKET_COL] if n_pb else []),
         )
-        if epoch_id is None and on_result is None and has_history:
-            # interactive path: profile checkpoint and append staging are
-            # independent jobs over the same materialized caches (the
-            # stored-side plan pinned the pre-append file list above) —
-            # overlap them (guide §2.6).  Exactly-once feeds keep the
-            # strict results-durable-before-stamp order below; cold first
-            # batches stay sequential (their caches are unmaterialized —
-            # two concurrent consumers would compute the gram pipeline
-            # twice).
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_prof = pool.submit(
-                    lambda: prof.localCheckpoint(eager=True)
-                )
-                fut_append = pool.submit(self.table.append, append_frame)
-                out = fut_prof.result()
-                fut_append.result()
-            batch_counts.unpersist()
-            grams.unpersist()
-            return out
-        # profile materializes BEFORE the append (pre-append snapshot +
-        # independence from the cached/staged batch state)
-        prof = prof.localCheckpoint(eager=True)
-        if on_result is not None:
-            on_result(prof)  # sink effect before the epoch stamp
-        self.table.append(
-            append_frame,
-            summary={"epoch_id": str(epoch_id)} if epoch_id is not None else None,
+        return _admit_batch(
+            self.table, append_frame, prof, has_history, epoch_id, on_result,
+            [batch_counts, grams],
         )
-        batch_counts.unpersist()
-        grams.unpersist()
-        return prof
 
     def remove_docs(
         self,

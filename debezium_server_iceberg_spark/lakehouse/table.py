@@ -7,12 +7,18 @@ parquet + an atomic JSON metadata log, Iceberg-style:
 - data files written by Spark (distributed, partitioned via hidden-partition
   transforms), never mutated in place;
 - each commit produces a new immutable snapshot = manifest of data files with
-  per-file row counts, partition values, and key-column bounds;
-- the atomic point is an ``os.replace`` of ``version-hint.text`` after writing
-  ``v{N}.metadata.json`` with O_EXCL (optimistic concurrency — two writers
-  racing on the same version: one loses and retries), mirroring Iceberg's
-  Hadoop-catalog commit and the reference's commit protocols
-  (IcebergTableOperator.java:218-228, IcebergOffsetBackingStore.java:219-223).
+  per-file row counts, partition values, and key-column bounds.
+
+Commit protocol — one path, the reference's write / commit /
+``writer.abort()`` (IcebergTableOperator.java:218-237):
+``_stage_then_commit`` runs a commit's independent stagings (concurrently
+on ``InheritableThread``s, keeping the caller's job group), then commits;
+on any failure it removes everything staged.  Every commit, metadata-only
+ones included, ends in ``_cas``: apply the change to a fresh metadata read
+and write ``v{N+1}.metadata.json`` with O_EXCL; a loser gets
+``CommitConflict``, drops its manifest and retries.  The atomic point is
+the ``os.replace`` of ``version-hint.text`` (Iceberg's Hadoop-catalog
+commit; IcebergOffsetBackingStore.java:219-223).
 
 Capability parity map (reference file:line -> here):
 - table auto-create w/ schema+PK+partition+sort  IcebergChangeConsumer.java:321-389
@@ -32,19 +38,21 @@ file list — same as Iceberg's planning model.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import time
 import uuid as uuidlib
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .transforms import PartitionField
 
 _HINT = "version-hint.text"
+_COMMIT_ATTEMPTS = 5  # optimistic-concurrency retries per commit (LakeTable._cas)
 
 # layout-versioning table properties (see LakeTable.create)
 BUCKET_HASH_PROP = "engine.bucket-hash"
@@ -367,19 +375,40 @@ class LakeTable:
         meta = meta if meta is not None else self.metadata()
         return int(meta.properties.get("format-version", "2")) >= 3
 
-    def update_properties(self, retries: int = 5, **props) -> None:
-        """Metadata-only property update (Iceberg's UpdateProperties): CAS
-        through the same optimistic-concurrency commit as data writes."""
-        for attempt in range(retries):
+    def _cas(self, mutate: Callable[[TableMetadata], Any]) -> Any:
+        """The one optimistic-concurrency loop: ``mutate`` edits a fresh
+        metadata read in place and returns the caller's result (``False``
+        abandons without writing); on ``CommitConflict`` re-read and
+        re-apply.  A failed attempt's new manifest is removed — nothing
+        references it and ``remove_orphan_files`` only sweeps data_dir."""
+        for attempt in range(_COMMIT_ATTEMPTS):
             meta = self.metadata()
-            meta.properties.update({k: str(v) for k, v in props.items()})
+            before = {s.manifest for s in meta.snapshots}
+            out = mutate(meta)
+            if out is False:
+                return out
+            written = [
+                os.path.join(self.meta_dir, m)
+                for m in {s.manifest for s in meta.snapshots} - before
+            ]
             try:
                 self._write_metadata(meta, expected_version=meta.version)
-                return
+                return out
             except CommitConflict:
-                if attempt == retries - 1:
+                _remove_quietly(written)
+                if attempt == _COMMIT_ATTEMPTS - 1:
                     raise
-                time.sleep(0.05 * (attempt + 1))
+            except BaseException:
+                _remove_quietly(written)
+                raise
+            time.sleep(0.05 * (attempt + 1))
+
+    def update_properties(self, **props) -> None:
+        """Metadata-only property update (Iceberg's UpdateProperties): CAS
+        through the same optimistic-concurrency commit as data writes."""
+        self._cas(
+            lambda meta: meta.properties.update({k: str(v) for k, v in props.items()})
+        )
 
     # ------------------------------------------------------------ manifests
 
@@ -425,7 +454,6 @@ class LakeTable:
         remove_paths: set[str],
         summary: dict[str, Any] | None = None,
         new_schema: T.StructType | None = None,
-        retries: int = 5,
         add_deletes: list[DeleteFile] | None = None,
         drop_deletes: bool = False,
         branch: str = "main",
@@ -440,8 +468,8 @@ class LakeTable:
         ``branch``: commit on a named branch ref instead of main (Iceberg's
         branch writes / WAP pattern) — the new snapshot's base is the branch
         head and only that ref advances; main is untouched."""
-        for attempt in range(retries):
-            meta = self.metadata()
+
+        def mutate(meta: TableMetadata) -> None:
             if branch == "main":
                 base_sid = meta.current_snapshot_id
             else:
@@ -517,14 +545,8 @@ class LakeTable:
                 meta.refs[branch] = {"snapshot_id": sid, "type": "branch"}
             if new_schema is not None:
                 meta.schema_json = new_schema.jsonValue()
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return
-            except CommitConflict:
-                if attempt == retries - 1:
-                    raise
-                meta.snapshots.pop()
-                time.sleep(0.05 * (attempt + 1))
+
+        self._cas(mutate)
 
     # ------------------------------------------------------------ write ops
 
@@ -830,22 +852,65 @@ class LakeTable:
         shutil.rmtree(staging, ignore_errors=True)
         return self._collect_stats(spark, restage, meta)
 
-    def _abort_staged(
-        self, add: list[DataFile], deletes: list[DeleteFile] | None = None
-    ) -> None:
+    def _abort_staged(self, staged: Iterable[DataFile | DeleteFile]) -> None:
         """Discard staged-but-uncommitted files (W12 abort path: the
         reference's writer.abort(), IcebergTableOperator.java:229-237).
         Staged files live under a per-write uuid directory inside data_dir;
         removing those roots cannot touch committed files, which are never
         re-staged."""
         roots: set[str] = set()
-        for f in list(add) + list(deletes or []):
+        for f in staged:
             rel = os.path.relpath(f.path, self.data_dir)
             top = rel.split(os.sep)[0]
             if top and top != "..":
                 roots.add(os.path.join(self.data_dir, top))
         for r in roots:
             shutil.rmtree(r, ignore_errors=True)
+
+    def _stage_then_commit(
+        self, stagings: Sequence[Callable[[], Any] | None], commit: Callable[..., Any]
+    ) -> Any:
+        """Run independent ``stagings`` (``None`` entries skipped, yielding
+        ``None``), then return ``commit(*results)``.  A staging returns its
+        staged files or any value the commit needs (e.g. a checkpointed
+        frame).  Two or more live stagings run on ``InheritableThread``s,
+        so their jobs keep the caller's job group and their per-job driver
+        cost overlaps; one runs inline.  On any failure every staged file
+        is removed and the first error (staging order) is raised, the
+        others added as notes."""
+        results: list[Any] = [None] * len(stagings)
+        errors: list[BaseException | None] = [None] * len(stagings)
+
+        def run(i: int) -> None:
+            try:
+                results[i] = stagings[i]()
+            except BaseException as e:  # re-raised below, after every join
+                errors[i] = e
+
+        live = [i for i, fn in enumerate(stagings) if fn is not None]
+        if len(live) > 1:
+            from pyspark import InheritableThread
+
+            threads = [InheritableThread(run, args=(i,)) for i in live]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join()
+        else:
+            for i in live:
+                run(i)
+        try:
+            failed = [e for e in errors if e is not None]
+            if failed:
+                for e in failed[1:]:
+                    failed[0].add_note(f"another staging also failed: {e!r}")
+                raise failed[0]
+            return commit(*results)
+        except BaseException:
+            self._abort_staged(
+                f for r in results if isinstance(r, list) for f in r
+            )
+            raise
 
     def append(
         self, df: DataFrame, summary: dict | None = None, branch: str = "main"
@@ -856,24 +921,21 @@ class LakeTable:
         own stats, so no extra Spark action runs.  ``branch`` appends onto a
         named branch ref (write-audit-publish staging) instead of main."""
         meta = self.metadata()
-        add = self._stage_write(df, meta)
-        try:
+
+        def commit(add: list[DataFile]) -> int:
             self._commit_snapshot("append", add, set(), summary, branch=branch)
-        except Exception:
-            self._abort_staged(add)
-            raise
-        return sum(f.rows for f in add)
+            return sum(f.rows for f in add)
+
+        return self._stage_then_commit([lambda: self._stage_write(df, meta)], commit)
 
     def overwrite(self, df: DataFrame, summary: dict | None = None) -> None:
         """Full-table overwrite (reference OverwriteFiles alwaysTrue,
         IcebergOffsetBackingStore.java:219-223)."""
         meta = self.metadata()
-        add = self._stage_write(df, meta)
-        try:
-            self._commit_snapshot("overwrite", add, set(), summary)
-        except Exception:
-            self._abort_staged(add)
-            raise
+        self._stage_then_commit(
+            [lambda: self._stage_write(df, meta)],
+            lambda add: self._commit_snapshot("overwrite", add, set(), summary),
+        )
 
     def truncate(self, summary: dict | None = None) -> None:
         """Overwrite commit with ZERO data files: clears the table without
@@ -899,21 +961,19 @@ class LakeTable:
         ``_last_updated_sequence_number`` columns present on ``add_df``
         (rewrite paths only — see ``_stage_write``)."""
         meta = self.metadata()
-        add = (
-            self._stage_write(
-                add_df, meta, target_partitions, preserve_layout,
-                preserve_lineage,
-            )
-            if add_df is not None
-            else []
-        )
-        try:
-            self._commit_snapshot(
+        self._stage_then_commit(
+            [
+                lambda: self._stage_write(
+                    add_df, meta, target_partitions, preserve_layout,
+                    preserve_lineage,
+                )
+                if add_df is not None
+                else []
+            ],
+            lambda add: self._commit_snapshot(
                 "delta", add, set(remove_paths), summary, drop_deletes=drop_deletes
-            )
-        except Exception:
-            self._abort_staged(add)
-            raise
+            ),
+        )
 
     def commit_row_delta(
         self,
@@ -942,12 +1002,7 @@ class LakeTable:
         if not key_cols:
             raise ValueError("commit_row_delta requires identifier fields")
 
-        def _stage_add() -> list[DataFile]:
-            return self._stage_write(add_df, meta) if add_df is not None else []
-
         def _stage_posdel() -> list[DeleteFile]:
-            if delete_positions_df is None:
-                return []
             staging = os.path.join(self.data_dir, "posdel-" + uuidlib.uuid4().hex)
             out: list[DeleteFile] = []
             try:
@@ -983,8 +1038,6 @@ class LakeTable:
                 raise
 
         def _stage_eqdel() -> list[DeleteFile]:
-            if delete_keys_df is None:
-                return []
             staging = os.path.join(self.data_dir, "deletes-" + uuidlib.uuid4().hex)
             try:
                 # few small files per batch: a CDC batch's distinct keys are
@@ -1013,54 +1066,21 @@ class LakeTable:
                 shutil.rmtree(staging, ignore_errors=True)
                 raise
 
-        # The 2-3 staging writes are INDEPENDENT Spark jobs over different
-        # inputs into different staging dirs — submit them concurrently so
-        # the per-job driver fixed cost (scheduling + commit + footer
-        # stats) overlaps instead of serializing (guide §2.6: actions are
-        # only sequential because driver code calls them sequentially).
-        # Every MoR upsert pays this per commit; each staging keeps its
-        # own abort, and a failure aborts whatever the others staged.
-        stages = [_stage_add, _stage_posdel, _stage_eqdel]
-        n_live = sum(
-            x is not None for x in (add_df, delete_positions_df, delete_keys_df)
-        )
-        add: list[DataFile] = []
-        add_deletes: list[DeleteFile] = []
-        if n_live > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=n_live) as pool:
-                futs = [pool.submit(fn) for fn in stages]
-                results, first_err = [], None
-                for fut in futs:
-                    try:
-                        results.append(fut.result())
-                    except Exception as e:  # keep draining: abort needs all
-                        results.append(None)
-                        first_err = first_err or e
-            if first_err is not None:
-                staged_add = results[0] or []
-                staged_dels = [d for r in results[1:] if r for d in r]
-                self._abort_staged(staged_add, staged_dels)
-                raise first_err
-            add = results[0]
-            add_deletes = results[1] + results[2]
-        else:
-            try:
-                add = _stage_add()
-                add_deletes = _stage_posdel() + _stage_eqdel()
-            except Exception:
-                self._abort_staged(add, add_deletes)
-                raise
-        try:
+        def commit(add, posdel, eqdel) -> tuple[int, int]:
+            add, dels = add or [], (posdel or []) + (eqdel or [])
             self._commit_snapshot(
-                "rowdelta", add, set(), summary, add_deletes=add_deletes,
-                branch=branch,
+                "rowdelta", add, set(), summary, add_deletes=dels, branch=branch
             )
-        except Exception:
-            self._abort_staged(add, add_deletes)
-            raise
-        return (sum(f.rows for f in add), sum(d.rows for d in add_deletes))
+            return (sum(f.rows for f in add), sum(d.rows for d in dels))
+
+        return self._stage_then_commit(  # every MoR upsert overlaps these
+            [
+                (lambda: self._stage_write(add_df, meta)) if add_df is not None else None,
+                _stage_posdel if delete_positions_df is not None else None,
+                _stage_eqdel if delete_keys_df is not None else None,
+            ],
+            commit,
+        )
 
     def update_schema(self, new_schema: T.StructType) -> None:
         """Schema-evolution commit; no data movement (ALTER TABLE ADD COLUMNS
@@ -1077,8 +1097,7 @@ class LakeTable:
         effect, like Iceberg's rewrite_data_files."""
         from .transforms import parse_partition_spec
 
-        for attempt in range(5):
-            meta = self.metadata()
+        def mutate(meta: TableMetadata) -> None:
             names = {f.name for f in meta.schema.fields}
             new = (
                 parse_partition_spec(spec, names)
@@ -1091,32 +1110,22 @@ class LakeTable:
                         f"partition source column {pf.source!r} not in schema"
                     )
             meta.partition_spec = new
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+
+        self._cas(mutate)
 
     # ------------------------------------------------- refs (tags/branches)
 
     def _set_ref(self, name: str, ref_type: str, snapshot_id: int | None) -> None:
         if name == "main":
             raise ValueError("'main' is the implicit current-snapshot ref")
-        for attempt in range(5):
-            meta = self.metadata()
+
+        def mutate(meta: TableMetadata) -> None:
             sid = snapshot_id if snapshot_id is not None else meta.current_snapshot_id
             if sid is None or all(s.snapshot_id != sid for s in meta.snapshots):
                 raise ValueError(f"no snapshot {sid} to reference")
             meta.refs[name] = {"snapshot_id": sid, "type": ref_type}
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+
+        self._cas(mutate)
 
     def create_tag(self, name: str, snapshot_id: int | None = None) -> None:
         """Immutable named pointer at a snapshot (Iceberg CREATE TAG):
@@ -1131,18 +1140,12 @@ class LakeTable:
         self._set_ref(name, "branch", snapshot_id)
 
     def drop_ref(self, name: str) -> None:
-        for attempt in range(5):
-            meta = self.metadata()
+        def mutate(meta: TableMetadata) -> None:
             if name not in meta.refs:
                 raise ValueError(f"no ref named {name!r}")
             del meta.refs[name]
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+
+        self._cas(mutate)
 
     def refs(self) -> dict[str, dict]:
         """All named refs, including the implicit main branch."""
@@ -1168,8 +1171,8 @@ class LakeTable:
         branch head (walks ``parent_id`` lineage), so nothing committed to
         main since the branch diverged can be silently dropped.  Returns the
         new current snapshot id."""
-        for attempt in range(5):
-            meta = self.metadata()
+
+        def mutate(meta: TableMetadata) -> int:
             ref = meta.refs.get(branch)
             if ref is None or ref.get("type") != "branch":
                 raise ValueError(f"no branch named {branch!r}")
@@ -1184,14 +1187,9 @@ class LakeTable:
                     f"branch {branch!r} head ({head}); cannot fast-forward"
                 )
             meta.current_snapshot_id = head
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-                return head
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return head
+            return head
+
+        return self._cas(mutate)
 
     # --------------------------------------------------------- maintenance
 
@@ -1377,10 +1375,10 @@ class LakeTable:
         expire_snapshots maintenance procedure). Returns files deleted."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        for attempt in range(5):
-            meta = self.metadata()
+
+        def mutate(meta: TableMetadata) -> "tuple[set[str], list[str]] | bool":
             if len(meta.snapshots) <= keep_last:
-                return 0
+                return False
             # snapshots pinned by named refs (tags/branch heads) are never
             # expired — same protection Iceberg's procedure applies
             pinned = {r["snapshot_id"] for r in meta.refs.values()}
@@ -1391,7 +1389,8 @@ class LakeTable:
             ]
             expired = [s for s in meta.snapshots if s not in keep]
             if not expired:
-                return 0
+                return False
+
             def _all_paths(sid: int) -> set[str]:
                 e = self._manifest_entry(meta, sid)
                 return {f["path"] for f in e["files"]} | {
@@ -1402,27 +1401,16 @@ class LakeTable:
             dead_paths = (
                 set().union(*(_all_paths(s.snapshot_id) for s in expired)) - live_paths
             )
-            old_manifests = [s.manifest for s in expired]
             meta.snapshots = keep
-            try:
-                self._write_metadata(meta, expected_version=meta.version)
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-                continue
-            for p in dead_paths:
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-            for m in old_manifests:
-                try:
-                    os.remove(os.path.join(self.meta_dir, m))
-                except OSError:
-                    pass
-            return len(dead_paths)
-        return 0
+            return dead_paths, [s.manifest for s in expired]
+
+        done = self._cas(mutate)
+        if done is False:
+            return 0
+        dead_paths, old_manifests = done
+        _remove_quietly(dead_paths)
+        _remove_quietly(os.path.join(self.meta_dir, m) for m in old_manifests)
+        return len(dead_paths)
 
     def remove_orphan_files(self, older_than_seconds: float = 86400.0) -> list[str]:
         """Delete data-dir files no retained snapshot references (Iceberg's
@@ -2055,6 +2043,12 @@ def _auto_write_partitions(
         # contract: sizing unavailable (unreachable JVM stats, non-numeric
         # confs like shuffle.partitions='auto') -> None, never a crash
         return None
+
+
+def _remove_quietly(paths: Iterable[str]) -> None:
+    for p in paths:
+        with contextlib.suppress(OSError):
+            os.remove(p)
 
 
 def _plan_size_est(df: DataFrame) -> int | None:

@@ -1,5 +1,6 @@
 """Incremental MinHash index: batch-split results must equal one-shot LSH."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from debezium_server_iceberg_spark.functions.dedup import minhash_near_dup_pairs
@@ -1766,3 +1767,104 @@ def test_pairs_log_requires_maintain_cadence(spark, tmp_path):
         )
     with _pytest.raises(ValueError, match="pairs_dir AND maintain_every"):
         run_vector_index_stream(stream, mh, str(tmp_path / "c2"), pairs_log=log)
+
+
+_FAIL_BASE = "the quick brown fox jumps over the lazy dog near the river bank"
+_FAIL_BATCHES = (
+    [
+        (1, _FAIL_BASE),
+        (2, "a completely different sentence about parquet files and commits here"),
+        (3, "streaming feeds replay epochs so every effect must happen exactly once"),
+    ],
+    [
+        (4, _FAIL_BASE + " today"),
+        (5, "streaming feeds replay epochs so every effect must happen exactly twice"),
+        (6, "nothing in this document overlaps with any earlier batch at all ok"),
+    ],
+)
+
+
+def _fail_index(kind, warehouse, name):
+    from debezium_server_iceberg_spark.functions.incremental import SubstringIndex
+
+    cat = LakeCatalog(warehouse)
+    if kind == "minhash":
+        return MinHashIndex.create(cat, "idx", name)
+    return SubstringIndex.create(cat, "idx", name)
+
+
+def _index_contents(spark, idx):
+    return sorted(tuple(r) for r in idx.table.to_df(spark).collect())
+
+
+@pytest.mark.parametrize("kind", ["minhash", "substring"])
+@pytest.mark.parametrize(
+    "epoch_id, fail", [(None, "checkpoint"), (7, "checkpoint"), (7, "on_result")]
+)
+def test_add_batch_failure_leaves_table_unchanged(
+    spark, warehouse, monkeypatch, kind, epoch_id, fail
+):
+    """A with-history add_batch whose result checkpoint (or on_result
+    hook) raises: no snapshot is added, no staged parquet is left under
+    data/, the batch caches are released, and a retry leaves the same
+    table as one clean add_batch — Substring n_docs sums are not doubled."""
+    import os
+
+    from pyspark import StorageLevel
+
+    schema = "doc_id long, text string"
+    first, second = (spark.createDataFrame(b, schema) for b in _FAIL_BATCHES)
+    prev = None if epoch_id is None else epoch_id - 1
+    control = _fail_index(kind, warehouse, "control")
+    control.add_batch(first, epoch_id=prev)
+    control.add_batch(second, epoch_id=epoch_id)
+
+    idx = _fail_index(kind, warehouse, "probe")
+    idx.add_batch(first, epoch_id=prev)
+    snaps = len(idx.table.metadata().snapshots)
+
+    def parquet_on_disk():
+        return {
+            os.path.join(root, n)
+            for root, _dirs, names in os.walk(idx.table.data_dir)
+            for n in names
+            if n.endswith(".parquet")
+        }
+
+    committed = parquet_on_disk()
+    frame_cls = type(second)
+    real_cache = frame_cls.cache
+    cached = []
+
+    def recording_cache(df):
+        cached.append(df)
+        return real_cache(df)
+
+    def boom(*a, **k):
+        raise RuntimeError("injected failure")
+
+    monkeypatch.setattr(frame_cls, "cache", recording_cache)
+    if fail == "checkpoint":
+        monkeypatch.setattr(frame_cls, "localCheckpoint", boom)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        idx.add_batch(
+            second,
+            epoch_id=epoch_id,
+            on_result=boom if fail == "on_result" else None,
+        )
+    monkeypatch.undo()
+
+    assert len(idx.table.metadata().snapshots) == snaps
+    assert parquet_on_disk() == committed
+    assert cached and all(df.storageLevel == StorageLevel.NONE for df in cached)
+
+    # the caller's retry appends the batch exactly once
+    assert idx.add_batch(second, epoch_id=epoch_id) is not None
+    assert _index_contents(spark, idx) == _index_contents(spark, control)
+    if kind == "substring":
+
+        def gram_sums(i):
+            totals = i.table.to_df(spark).groupBy("_h").agg(F.sum("n_docs"))
+            return sorted(tuple(r) for r in totals.collect())
+
+        assert gram_sums(idx) == gram_sums(control)

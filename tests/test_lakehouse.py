@@ -1,5 +1,7 @@
 """Lakehouse table format: create/append/overwrite/evolve/time-travel/partitioning."""
 
+import os
+
 import pytest
 from pyspark.sql import Row, functions as F, types as T
 
@@ -277,6 +279,107 @@ def test_abort_cleans_staged_files(spark, warehouse, monkeypatch):
 
     t.append(spark.createDataFrame([(5, "e", None)], SCHEMA))
     assert t.row_count() == 3
+
+
+def _staged_parquet(t):
+    return {
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(t.data_dir)
+        for n in names
+        if n.endswith(".parquet")
+    }
+
+
+def test_failing_stagings_report_every_error_and_abort(spark, warehouse, monkeypatch):
+    """Two of three concurrent stagings fail: the first error (staging
+    order) is raised with the other attached, and the one staging that
+    succeeded is aborted too — no orphan, no snapshot."""
+    cat = LakeCatalog(warehouse)
+    t = cat.create_table("ns", "two_fail", SCHEMA, identifier_fields=["id"])
+    t.append(spark.createDataFrame([(1, "a", None)], SCHEMA))
+    committed = _staged_parquet(t)
+    real_stats = t._collect_stats
+
+    def stage_add_fails(*a, **k):
+        raise RuntimeError("data staging failed")
+
+    def eqdel_stats_fail(spark_, staging, meta):
+        if os.path.basename(staging).startswith("deletes-"):
+            raise RuntimeError("equality-delete staging failed")
+        return real_stats(spark_, staging, meta)
+
+    monkeypatch.setattr(t, "_stage_write", stage_add_fails)
+    monkeypatch.setattr(t, "_collect_stats", eqdel_stats_fail)
+    upsert = spark.createDataFrame([(1, "b", None)], SCHEMA)
+    positions = spark.createDataFrame(
+        [(os.path.basename(next(iter(committed))), 0)], "file_name string, pos long"
+    )
+    with pytest.raises(RuntimeError, match="data staging failed") as err:
+        t.commit_row_delta(
+            upsert, upsert.select("id"), delete_positions_df=positions
+        )
+    monkeypatch.undo()
+    notes = getattr(err.value, "__notes__", [])
+    assert any("equality-delete staging failed" in n for n in notes), notes
+    # the position-delete staging succeeded and was aborted with the rest
+    assert _staged_parquet(t) == committed
+    assert len(t.metadata().snapshots) == 1
+
+
+def test_cas_retry_leaves_no_manifest_behind(spark, warehouse, monkeypatch):
+    """An append that loses one optimistic-concurrency race retries and
+    commits; the losing attempt's manifest is removed (no snapshot
+    references it, and remove_orphan_files only sweeps data/)."""
+    from debezium_server_iceberg_spark.lakehouse import table as table_mod
+
+    cat = LakeCatalog(warehouse)
+    t = cat.create_table("ns", "cas_t", SCHEMA, identifier_fields=["id"])
+    t.append(spark.createDataFrame([(1, "a", None)], SCHEMA))
+    real_write = t._write_metadata
+    attempts = []
+
+    def conflict_once(meta, expected_version):
+        attempts.append(expected_version)
+        if len(attempts) == 1:
+            raise table_mod.CommitConflict("synthetic race")
+        return real_write(meta, expected_version)
+
+    monkeypatch.setattr(t, "_write_metadata", conflict_once)
+    t.append(spark.createDataFrame([(2, "b", None)], SCHEMA))
+    monkeypatch.undo()
+    t.append(spark.createDataFrame([(3, "c", None)], SCHEMA))
+
+    assert len(attempts) == 2
+    snaps = t.metadata().snapshots
+    on_disk = sorted(n for n in os.listdir(t.meta_dir) if n.startswith("manifest-"))
+    assert len(snaps) == 3
+    assert on_disk == sorted(s.manifest for s in snaps)
+    assert t.row_count() == 3
+
+
+def test_row_delta_stagings_inherit_caller_job_group(spark, warehouse):
+    """The concurrent stagings of a MoR upsert run their Spark jobs in the
+    caller's job group (so cancelJobGroup and the UI attribute them): no
+    ungrouped job starts during the call."""
+    cat = LakeCatalog(warehouse)
+    t = cat.create_table("ns", "jobgroup_t", SCHEMA, identifier_fields=["id"])
+    t.append(spark.createDataFrame([(1, "a", None)], SCHEMA))
+    upsert = spark.createDataFrame([(1, "b", None), (2, "c", None)], SCHEMA)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = "row-delta-stagings"
+    bus.waitUntilEmpty()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "commit_row_delta stagings")
+    try:
+        t.commit_row_delta(upsert, upsert.select("id"))
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+    assert tracker.getJobIdsForGroup(group)  # the stagings did run jobs
+    assert t.to_df(spark).count() == 2
 
 
 def test_register_views_sql_read_surface(spark, warehouse):
